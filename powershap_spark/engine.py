@@ -35,7 +35,7 @@ import time
 import numpy as np
 import pandas as pd
 
-from .kernel import RANDOM_COL, explain_iteration, explain_prepared, prepare_block
+from .kernel import RANDOM_COL, explain_prepared, prepare_block
 from .stats import shaps_long_to_wide, statistical_analysis
 
 _RESULT_SCHEMA = (
@@ -209,85 +209,6 @@ def _make_group_fn(
     return fn
 
 
-_RESULT_ARROW_SCHEMA = None
-
-
-def _result_arrow_schema():
-    global _RESULT_ARROW_SCHEMA
-    if _RESULT_ARROW_SCHEMA is None:
-        import pyarrow as pa
-
-        _RESULT_ARROW_SCHEMA = pa.schema(
-            [
-                ("iteration", pa.int32()),
-                ("part_id", pa.int32()),
-                ("feature", pa.string()),
-                ("mean_abs_shap", pa.float32()),
-                ("n_val_rows", pa.int64()),
-                ("n_rows", pa.int64()),
-                ("wall_ms", pa.float64()),
-            ]
-        )
-    return _RESULT_ARROW_SCHEMA
-
-
-def _make_arrow_fn(group_fn):
-    """Wrap the applyInPandas group body for ``mapInArrow`` over the
-    PRE-PARTITIONED, PRE-SORTED cached matrix (one Exchange at init, zero
-    per batch). Motivation (ANALYSIS_r06 §1 "what remains"): after the
-    post-shuffle persist eliminated the per-batch Exchange+Sort, the
-    remaining fixed cost is the Python-side group materialization —
-    pyspark's grouped-map serializer rebuilds a consolidated pandas frame
-    per group on every batch. mapInArrow hands this function the raw
-    Arrow stream instead; part_id runs are CONTIGUOUS within a partition
-    (sortWithinPartitions('part_id', ...) at init), so each group is a
-    ZERO-COPY table slice, converted once with split_blocks (no
-    consolidation pass). Results are bit-identical: the same group body
-    runs on the same rows in the same order (the body re-sorts by
-    sort_cols with a stable mergesort either way).
-
-    MEASURED NEGATIVE at the flagship shape (sf1, 128 parts, 32 cores,
-    interleaved min-of-8 vs the grouped-map twin): explain(5) 1.36 s vs
-    1.02 s — with one group per partition the grouped-map serializer has
-    nothing to amortize away, while this path must drain the full batch
-    iterator before its first yield and re-encode results to Arrow in
-    Python. Kept OPT-IN (``arrow_explain=True``) for parity testing and
-    for shapes with many groups per partition, exactly like the
-    literal-map id-mapping precedent (ANALYSIS_r06 §7c)."""
-    import pyarrow as pa
-
-    def fn(batches):
-        batches = [b for b in batches if b.num_rows > 0]
-        if not batches:
-            return
-        # one consolidation pass: slices of a single-chunk table convert
-        # to pandas without per-column chunk concatenation
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        pid = tbl.column("part_id").to_numpy()
-        cuts = np.flatnonzero(np.diff(pid)) + 1
-        starts = np.concatenate(([0], cuts))
-        ends = np.concatenate((cuts, [len(pid)]))
-        # one slice per contiguous run; duplicate part_ids across runs
-        # would mean the cached layout lost its sort — fail loudly rather
-        # than emit duplicate partials for one (iteration, part_id)
-        run_ids = pid[starts]
-        if len(np.unique(run_ids)) != len(run_ids):
-            raise RuntimeError(
-                "part_id runs are not contiguous in the cached matrix "
-                "partition — expected sortWithinPartitions('part_id', ...) "
-                "layout"
-            )
-        schema = _result_arrow_schema()
-        for s, e in zip(starts, ends):
-            sub = tbl.slice(int(s), int(e - s)).to_pandas(split_blocks=True)
-            out = group_fn((int(pid[s]),), sub)
-            yield pa.RecordBatch.from_pandas(
-                out, schema=schema, preserve_index=False
-            )
-
-    return fn
-
-
 class SparkExplainBackend:
     """Executes explain batches on a prepared Spark DataFrame."""
 
@@ -312,11 +233,9 @@ class SparkExplainBackend:
         cv_start_pos: int = 0,
         matrix_dtype="float32",
         single_batch: bool = False,
-        arrow_explain: bool = False,
     ):
         from pyspark.sql import functions as F
 
-        self.arrow_explain = bool(arrow_explain)
         self.matrix_dtype = np.dtype(matrix_dtype)
         self.feature_cols = list(feature_cols)
         self.label_col = label_col
@@ -390,7 +309,6 @@ class SparkExplainBackend:
             # single batch. Falls back gracefully (just per-batch shuffles)
             # if explain is nevertheless called again.
             self.df = proj
-            self._proj = None
             return
 
         # Persist the matrix POST-shuffle, partitioned by part_id and sorted
@@ -406,7 +324,6 @@ class SparkExplainBackend:
         d2 = d2.repartition(max(1, n_parts), "part_id")
         d2 = d2.sortWithinPartitions("part_id", *(sort_cols or []))
         self.df = d2.cache()
-        self._proj = None
         # EAGER materialization, deliberately: with AQE, a plan compiled
         # over an UNMATERIALIZED cached relation cannot see its output
         # partitioning and inserts a defensive ENSURE_REQUIREMENTS shuffle
@@ -418,19 +335,10 @@ class SparkExplainBackend:
         finally:
             proj.unpersist()  # the pre-shuffle copy is redundant (also on failure)
 
-    def _release_proj(self) -> None:
-        if self._proj is not None:
-            try:
-                self._proj.unpersist()
-            except Exception:
-                pass
-            self._proj = None
-
     def release(self) -> None:
         """Unpersist the cached partitioned matrix (called by the selector
         when the fit completes — repeated fits must not accumulate cached
         data)."""
-        self._release_proj()
         try:
             self.df.unpersist()
         except Exception:
@@ -517,24 +425,16 @@ class SparkExplainBackend:
                     )
                 else:
                     # self.df is cached ALREADY partitioned by part_id and
-                    # sorted on (part_id, sort_cols) — either path below
-                    # plans no Exchange and no Sort (test_plans.py).
-                    # Grouped-map is the DEFAULT: the mapInArrow variant
-                    # measured SLOWER at the flagship one-group-per-
-                    # partition shape (see _make_arrow_fn docstring).
-                    if self.arrow_explain:
-                        res = (
-                            self.df.mapInArrow(
-                                _make_arrow_fn(fn), schema=_RESULT_SCHEMA
-                            )
-                            .toPandas()
-                        )
-                    else:
-                        res = (
-                            self.df.groupBy("part_id")
-                            .applyInPandas(fn, schema=_RESULT_SCHEMA)
-                            .toPandas()
-                        )
+                    # sorted on (part_id, sort_cols), so the grouped map
+                    # plans no Exchange and no Sort (test_plans.py). With
+                    # one group per partition mapInArrow has no per-group
+                    # cost to save: it measured slower (explain(5) at 128
+                    # parts on 32 cores: 1.36 s vs 1.02 s).
+                    res = (
+                        self.df.groupBy("part_id")
+                        .applyInPandas(fn, schema=_RESULT_SCHEMA)
+                        .toPandas()
+                    )
             finally:
                 if self.show_progress:
                     # don't leave the group attached to the user's thread
@@ -542,9 +442,6 @@ class SparkExplainBackend:
                     sc.setLocalProperty("spark.jobGroup.id", None)
                     sc.setLocalProperty("spark.job.description", None)
             wall = time.perf_counter() - t0
-            # first completed batch materialized the partitioned cache —
-            # the pre-shuffle projection copy is now redundant
-            self._release_proj()
             if res.empty:
                 raise ValueError(
                     "explain produced no results — the input DataFrame has no "

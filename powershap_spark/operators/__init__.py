@@ -17,8 +17,7 @@ from .windows import (
     row_number_ordered,
     session_gap,
     sessionize,
-    text_stats,
-    text_stats_fast,
+    text_stats_ints,
     time_rolling,
 )
 
@@ -49,7 +48,6 @@ __all__ = [
     "row_number_ordered",
     "session_gap",
     "sessionize",
-    "text_stats",
-    "text_stats_fast",
+    "text_stats_ints",
     "time_rolling",
 ]

@@ -40,7 +40,6 @@ __all__ = [
     "bfill",
     "row_number_ordered",
     "transition_counts",
-    "text_stats",
     "text_stats_ints",
     "build_features",
 ]
@@ -241,34 +240,18 @@ def transition_counts(
 # --- W8: per-turn text stats (scalar exprs feeding W1/W2) --------------------
 
 
-def text_stats_fast(text_col: str = "text") -> dict[str, Column]:
-    """Scalar per-turn text statistics via ``translate``/``length`` only —
-    NO regex. Java regex costs ~80us/row on transcript-sized strings
-    (measured: the regex variant burned 550 CPU-s on a 6.7M-row pass where
-    this one burns ~30); at 10^12 turns the difference is the bill.
-
-    Token semantics assume single-space-separated text (true for transcript
-    corpora normalized at ingest); for arbitrary whitespace use
-    ``text_stats`` (regex, exact)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_spaces = n_chars - F.length(F.translate(t, " ", ""))
-    n_tokens = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(n_spaces + 1)
-    upper = n_chars - F.length(F.translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", ""))
-    return {
-        "text_len": n_chars.cast("int"),
-        "n_tokens": n_tokens.cast("int"),
-        "avg_token_len": F.when(
-            n_tokens > 0, (n_chars - n_spaces) / n_tokens
-        ).cast("double"),
-        "n_punct": (n_chars - F.length(F.translate(t, ".,;:!?", ""))).cast("int"),
-        "upper_ratio": F.when(n_chars > 0, upper / n_chars).cast("double"),
-    }
-
-
 def text_stats_ints(text_col: str = "text") -> dict[str, Column]:
-    """Shuffle-lean integer projection of ``text_stats_fast``: ONLY int32
-    scalars. The ratio features are reconstructed AFTER the per-conversation
+    """Scalar per-turn text statistics as int32 columns, via
+    ``replace``/``translate``/``length`` only — no regex (a regex form
+    burned 550 CPU-s on a 6.7M-row pass where a translate form burned
+    ~30).
+
+    Token semantics are single-space: ``n_tokens`` is the space count + 1
+    (0 for blank text), so ``"  a  b  "`` has 7 tokens, not 2. That is
+    exact for transcript corpora normalized at ingest; for an arbitrary
+    whitespace count use ``text.token_count``.
+
+    The ratio features are reconstructed AFTER the per-conversation
     window shuffle from these ints (``avg_token_len = n_nonspace/n_tokens``)
     — identical double values, but the rows carried through the window
     exchange+sort hold four 4-byte ints instead of mixed ints/doubles. At
@@ -292,28 +275,6 @@ def text_stats_ints(text_col: str = "text") -> dict[str, Column]:
         "n_tokens": n_tokens.cast("int"),
         "n_nonspace": n_nonspace.cast("int"),
         "n_punct": (n_nonspace - n_alnum_like).cast("int"),
-    }
-
-
-def text_stats(text_col: str = "text") -> dict[str, Column]:
-    """Scalar per-turn text statistics; all built-in string functions."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    tokens = F.split(F.trim(t), r"\s+")
-    n_tokens = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(F.size(tokens))
-    return {
-        "text_len": n_chars.cast("int"),
-        "n_tokens": n_tokens.cast("int"),
-        "avg_token_len": F.when(
-            n_tokens > 0, F.length(F.regexp_replace(t, r"\s+", "")) / n_tokens
-        ).cast("double"),
-        "n_punct": F.length(t) - F.length(F.regexp_replace(t, r"[\.,;:!\?]", "")),
-        "upper_ratio": F.when(
-            n_chars > 0,
-            (
-                F.length(F.regexp_replace(t, r"[^A-Z]", "")) / n_chars
-            ),
-        ).cast("double"),
     }
 
 

@@ -95,16 +95,6 @@ def stream_transcripts(
     return r.parquet(path)
 
 
-def _tok_count(texts: pd.Series) -> pd.Series:
-    """Single-space token count — EXACTLY windows.text_stats_fast's
-    n_tokens (space count + 1, 0 for blank), so streamed n_tokens_avg_past
-    is bit-comparable to the batch feature build on the same corpus."""
-    t = texts.fillna("")
-    spaces = t.str.len() - t.str.replace(" ", "", regex=False).str.len()
-    blank = t.str.strip().str.len() == 0
-    return (spaces + 1).where(~blank, 0).astype("int64")
-
-
 def streaming_turn_features(
     stream: DataFrame,
     tau_seconds: float = 1800.0,
@@ -131,7 +121,14 @@ def streaming_turn_features(
     microbatch = nothing dropped). Lateness within the delay is accepted;
     the session timezone is pinned to UTC (session.py) so the epoch
     arithmetic is consistent with the watermark's epoch-millis.
+
+    ``text_len`` and the per-turn token count come from the batch
+    projection ``windows.text_stats_ints``, computed JVM-side before the
+    state fn, so streamed ``n_tokens_avg_past`` is bit-comparable to the
+    batch feature build on the same corpus.
     """
+    from .operators.windows import text_stats_ints
+
     tau = float(tau_seconds)
 
     def fn(
@@ -154,7 +151,8 @@ def streaming_turn_features(
             if n == 0:
                 continue
             pdf = pdf.sort_values("turn_idx", kind="mergesort")
-            toks = _tok_count(pdf["text"]).to_numpy()
+            # null text counts as empty: 0 chars, 0 tokens
+            toks = pdf["n_tokens"].fillna(0).to_numpy("int64")
             ep = (pdf["ts"].astype("int64") / 1e9).to_numpy()
 
             # every running feature is prefix-decomposable: carried scalars
@@ -183,7 +181,7 @@ def streaming_turn_features(
                     "conv_id": pdf["conv_id"].to_numpy(),
                     "turn_idx": pdf["turn_idx"].to_numpy(),
                     "ts": pdf["ts"].to_numpy(),
-                    "text_len": pdf["text"].fillna("").str.len().to_numpy("int32"),
+                    "text_len": pdf["text_len"].fillna(0).to_numpy("int32"),
                     "n_prev_turns": n_prev,
                     "n_tokens_avg_past": tok_avg,
                     "session_gap_s": gaps,
@@ -203,8 +201,11 @@ def streaming_turn_features(
         state.update((n_turns, tok_sum, last_ts, session_seq, last_tool))
         yield from out
 
+    stats = text_stats_ints("text")
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withColumns({c: stats[c] for c in ("text_len", "n_tokens")})
+        .drop("text")
+        .withWatermark("ts", watermark)
         .groupBy("conv_id")
         .applyInPandasWithState(
             fn,

@@ -1324,13 +1324,13 @@ def test_bpe_learn_matches_sennrich_reference(spark):
         )
 
     # BOTH induction paths must match the reference bit-exactly: the
-    # driver-local fast path (auto picks it — the dictionary is tiny)
-    # and the distributed batched loop (forced)
+    # driver-local fast path (picked by default — the dictionary is tiny)
+    # and the distributed batched loop (forced by a zero local budget)
     got = bpe_learn(docs, n_merges=10, checkpoint_every=3).toPandas()
     exp = reference(texts, 10)
     assert got.astype(str).values.tolist() == exp.astype(str).values.tolist()
     dist = bpe_learn(
-        docs, n_merges=10, checkpoint_every=3, mode="distributed"
+        docs, n_merges=10, checkpoint_every=3, max_local_vocab=0
     ).toPandas()
     assert dist.astype(str).values.tolist() == exp.astype(str).values.tolist()
 
@@ -1371,12 +1371,12 @@ def test_bpe_learn_batched_equals_sequential(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    # batching is a distributed-loop concept: force mode so the loop
-    # stays covered now that auto picks the driver-local path here
-    seq = bpe_learn(docs, n_merges=24, batch_size=1, mode="distributed").toPandas()
+    # batching is a distributed-loop concept: a zero local budget forces
+    # the loop, since the tiny dictionary would otherwise be induced locally
+    seq = bpe_learn(docs, n_merges=24, batch_size=1, max_local_vocab=0).toPandas()
     for bs in (2, 4, 8):
         got = bpe_learn(
-            docs, n_merges=24, batch_size=bs, mode="distributed"
+            docs, n_merges=24, batch_size=bs, max_local_vocab=0
         ).toPandas()
         assert got.values.tolist() == seq.values.tolist(), f"batch_size={bs}"
     with pytest.raises(ValueError):
@@ -1384,10 +1384,10 @@ def test_bpe_learn_batched_equals_sequential(spark):
 
 
 def test_bpe_learn_local_equals_distributed(spark):
-    """mode='auto'/'local' (driver-local exact Sennrich induction over the
-    collected word dictionary, VERDICT r7 #3) must be bit-identical to the
-    distributed loop on the tie-heavy corpus, and the auto probe must fall
-    back to distributed when the dictionary overflows max_local_vocab."""
+    """The driver-local exact Sennrich induction over the collected word
+    dictionary (picked when it fits max_local_vocab) must be bit-identical
+    to the distributed loop on the tie-heavy corpus, and the size probe
+    must fall back to distributed when the dictionary overflows."""
     import random
 
     from powershap_spark.operators.text import bpe_learn
@@ -1404,20 +1404,13 @@ def test_bpe_learn_local_equals_distributed(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    dist = bpe_learn(docs, n_merges=24, mode="distributed").toPandas()
-    loc = bpe_learn(docs, n_merges=24, mode="local").toPandas()
-    auto = bpe_learn(docs, n_merges=24, mode="auto").toPandas()
+    dist = bpe_learn(docs, n_merges=24, max_local_vocab=0).toPandas()
+    loc = bpe_learn(docs, n_merges=24).toPandas()
     assert loc.values.tolist() == dist.values.tolist()
-    assert auto.values.tolist() == dist.values.tolist()
 
-    # overflow: a 1-row budget forces the distributed fallback (auto) /
-    # a loud error (local)
-    over = bpe_learn(docs, n_merges=6, mode="auto", max_local_vocab=1).toPandas()
+    # overflow: a 1-row budget forces the distributed fallback
+    over = bpe_learn(docs, n_merges=6, max_local_vocab=1).toPandas()
     assert over.values.tolist() == dist.head(6).values.tolist()
-    with pytest.raises(ValueError):
-        bpe_learn(docs, n_merges=6, mode="local", max_local_vocab=1)
-    with pytest.raises(ValueError):
-        bpe_learn(docs, n_merges=6, mode="nope")
 
     # Unicode symbol-split parity: NEL/LS/PS survive \s+ tokenization but
     # Java's '.' (the distributed regexp_extract_all symbol split) skips
@@ -1426,8 +1419,8 @@ def test_bpe_learn_local_equals_distributed(spark):
     udocs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(utexts)), "text": utexts})
     )
-    ud = bpe_learn(udocs, n_merges=8, mode="distributed").toPandas()
-    ul = bpe_learn(udocs, n_merges=8, mode="local").toPandas()
+    ud = bpe_learn(udocs, n_merges=8, max_local_vocab=0).toPandas()
+    ul = bpe_learn(udocs, n_merges=8).toPandas()
     assert ul.values.tolist() == ud.values.tolist()
 
 
@@ -1833,19 +1826,6 @@ def test_build_vocab_and_tokens_to_ids(spark):
     assert list(out.loc[2, "input_ids"]) == []
     assert list(out.loc[3, "input_ids"]) == [0, 0] and out.loc[3, "n_unk"] == 2
 
-    # the opt-in literal-map path and its forced fallback (tiny
-    # max_map_size -> back to join) are value-identical to the default
-    for kw in ({"method": "map"}, {"method": "map", "max_map_size": 1}):
-        alt = (
-            tokens_to_ids(toks, vocab, **kw)
-            .toPandas()
-            .set_index("doc_id")
-            .sort_index()
-        )
-        for i in out.index:
-            assert list(alt.loc[i, "input_ids"]) == list(out.loc[i, "input_ids"])
-            assert alt.loc[i, "n_unk"] == out.loc[i, "n_unk"]
-
     # a corpus containing the LITERAL unk token: excluded from ranks,
     # maps to unk id, counted as OOV
     trap = spark.createDataFrame(
@@ -1867,15 +1847,10 @@ def test_build_vocab_and_tokens_to_ids(spark):
 
     p = plan(build_vocab(docs, size=3))
     assert "TakeOrderedAndProject" in p, p
-    p2 = plan(tokens_to_ids(toks, vocab))  # default join path
+    p2 = plan(tokens_to_ids(toks, vocab))
     assert re.search(r"BroadcastHashJoin|BroadcastNestedLoop", p2), p2
     assert "BroadcastNestedLoop" not in p2  # it is a real equi broadcast join
-    # opt-in literal-map path: PURE projection — no join, no Exchange
-    p3 = plan(tokens_to_ids(toks, vocab, method="map"))
-    assert "Join" not in p3 and "Exchange" not in p3, p3
 
-    with pytest.raises(ValueError):
-        tokens_to_ids(toks, vocab, method="bogus")
     with pytest.raises(ValueError):
         build_vocab(docs, size=0)
 
@@ -1895,28 +1870,3 @@ def test_build_vocab_accepts_pretokenized_arrays(spark):
     via_arr = build_vocab(toks, size=8, text_col="tokens").toPandas()
     assert via_text.sort_values("id").values.tolist() == \
         via_arr.sort_values("id").values.tolist()
-
-
-def test_lm_perplexity_counts_join_parity(spark):
-    """counts="join" (groupBy+join corpus counts) must be value-identical
-    to the default window form — counts are exact ints, the score math
-    identical; only the physical plan differs (measured 2x slower on the
-    near-uniform synthetic corpus, kept opt-in — ANALYSIS_r07 §5)."""
-    from powershap_spark.operators.text import lm_perplexity
-
-    texts = [
-        "the cat sat on the mat",
-        "the cat sat on the hat",
-        "zz qq xx vv",  # gibberish: high perplexity
-        "the the the the",
-        "",
-        "one",
-    ]
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    a = lm_perplexity(docs).orderBy("doc_id").toPandas()
-    b = lm_perplexity(docs, counts="join").orderBy("doc_id").toPandas()
-    assert a.fillna(-1).values.tolist() == b.fillna(-1).values.tolist()
-    with pytest.raises(ValueError):
-        lm_perplexity(docs, counts="broadcast")

@@ -21,7 +21,7 @@ from powershap_spark.operators.windows import (
     rolling,
     session_gap,
     sessionize,
-    text_stats,
+    text_stats_ints,
     time_rolling,
 )
 from tests.conftest import events_pdf
@@ -238,13 +238,17 @@ def test_sessionize_salted_equals_plain(spark):
     assert np.allclose(out.session_seq, exp)
 
 
-def test_text_stats(spark):
+def test_text_stats_ints(spark):
+    """Single-space token semantics: n_tokens is the space count + 1 (0
+    for blank text), so "  a  b  " has 7 tokens, not the 2 a whitespace
+    split would give; n_nonspace excludes spaces only."""
     pdf = pd.DataFrame({"text": ["Hello, World! How are you?", "", "ONE two", "  a  b  "]})
-    out = spark.createDataFrame(pdf).withColumns(text_stats("text")).toPandas()
+    out = spark.createDataFrame(pdf).withColumns(text_stats_ints("text")).toPandas()
     assert list(out.text_len) == [26, 0, 7, 8]
-    assert list(out.n_tokens) == [5, 0, 2, 2]
+    assert list(out.n_tokens) == [5, 0, 2, 7]
+    assert list(out.n_nonspace) == [22, 0, 6, 2]
     assert list(out.n_punct) == [3, 0, 0, 0]
-    assert out.upper_ratio[2] == pytest.approx(3 / 7)
+    assert all(str(out[c].dtype) == "int32" for c in out.columns if c != "text")
 
 
 def test_chunked_window_apply_equals_plain(spark):
