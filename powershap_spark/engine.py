@@ -93,7 +93,7 @@ class CheckpointStore:
 
 
 # ---------------------------------------------------------------------------
-# Spark batch executor
+# Explain backends
 # ---------------------------------------------------------------------------
 
 
@@ -118,6 +118,8 @@ def _make_group_fn(
     materialized ONCE (a single Arrow transfer per partition) and ALL batch
     iterations run on it in a local loop — the data is never replicated or
     re-shuffled per iteration. ``iteration_pairs`` = [(global_it, local_i)].
+    The Spark backend ships it to ``applyInPandas``; the local backend calls
+    it in-process on the whole frame as part 0.
 
     ``cv`` (an ``InfiniteSplitter``) + ``cv_positions`` (global_it ->
     absolute stream position) reconstruct the reference's single global
@@ -161,8 +163,6 @@ def _make_group_fn(
             )
 
         if cv is not None:
-            import numpy as _np
-
             y_ = (
                 pdf[stratify_col].to_numpy()
                 if stratify_col
@@ -171,7 +171,7 @@ def _make_group_fn(
             grp = pdf[group_col].to_numpy() if group_col else None
             first = cv_positions[iteration_pairs[0][0]]
             try:
-                gen = cv.at_position(first, _np.zeros((len(pdf), 1)), y=y_, groups=grp)
+                gen = cv.at_position(first, np.zeros((len(pdf), 1)), y=y_, groups=grp)
             except ValueError as e:
                 raise _cv_error(e) from e
             cur = first
@@ -209,8 +209,137 @@ def _make_group_fn(
     return fn
 
 
-class SparkExplainBackend:
-    """Executes explain batches on a prepared Spark DataFrame."""
+# the local properties setJobGroup writes; an explain batch restores them
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+class _ExplainBackend:
+    """The explain loop both backends share. A subclass prepares the data in
+    ``__init__`` and runs the per-block group function in ``_run_batch``;
+    everything else happens here, once."""
+
+    phase = "main"
+
+    def release(self) -> None:
+        """Free what ``__init__`` cached (called by the selector when the
+        fit completes). Nothing by default."""
+
+    def explain(
+        self,
+        loop_its: int,
+        seed_start: int,
+        exclude_cols: list[str] | None = None,
+        extra_fit_kwargs: dict | None = None,
+    ) -> pd.DataFrame:
+        """Run one explain batch (reference ShapExplainer.explain). Returns the
+        wide I x (m+1) shaps_df for THIS batch (float32), checkpoint-aware."""
+        feats = [c for c in self.feature_cols if c not in set(exclude_cols or [])]
+        global_its = list(range(seed_start, seed_start + loop_its))
+        done = self.store.completed_iterations(self.phase) if self.store else set()
+        todo = [g for g in global_its if g not in done]
+
+        # every iteration consumes exactly one split from the selector-global
+        # cv stream, cached or not — positions stay aligned under checkpoint
+        # resume because the driver control flow replays identically.
+        # cv_pos itself only advances AFTER the batch completes (below):
+        # consume-on-use, so a failed batch leaves the stream where it was
+        # and an in-process retry replays the same splits (the reference's
+        # sequential-generator semantics)
+        cv_positions = {g: self.cv_pos + i for i, g in enumerate(sorted(global_its))}
+        fit_kw = {**self.fit_kwargs, **(extra_fit_kwargs or {})}
+
+        long_parts: list[pd.DataFrame] = []
+        for g in global_its:
+            if g in done:
+                cached = self.store.read_iteration(self.phase, g)
+                # a checkpointed iteration from a convergence round may have a
+                # different feature set; only reuse when it matches
+                if set(cached["feature"]) == set(feats) | {RANDOM_COL}:
+                    long_parts.append(cached)
+                else:
+                    todo.append(g)
+
+        if todo:
+            # each partition block is materialized once and all todo
+            # iterations loop over it locally
+            iteration_pairs = [(int(g), int(g - seed_start)) for g in sorted(todo)]
+            fn = _make_group_fn(
+                feats,
+                self.label_col,
+                iteration_pairs,
+                seed_start,
+                self.val_size,
+                self.stratify_col,
+                self.group_col,
+                self.model,
+                self.probe_mode,
+                self.row_key_col,
+                self.sort_cols,
+                cv=self.cv,
+                cv_positions=cv_positions,
+                fit_kwargs=fit_kw,
+                matrix_dtype=self.matrix_dtype,
+            )
+            t0 = time.perf_counter()
+            res = self._run_batch(fn, iteration_pairs)
+            wall = time.perf_counter() - t0
+            if res.empty:
+                raise ValueError(
+                    "explain produced no results — the input DataFrame has no "
+                    "rows (e.g. every probe fell before its conversation start)"
+                )
+            # Surface degenerate (no-signal) fits DRIVER-side: a single-class
+            # block's zero-coefficient model yields all-zero partials for
+            # every feature, and the executor-side UserWarning raised inside
+            # applyInPandas never reaches the driver console (ADVICE r3).
+            blk_max = res.groupby(["iteration", "part_id"])["mean_abs_shap"].max()
+            degenerate = [
+                (int(i), int(p)) for (i, p) in blk_max[blk_max == 0.0].index
+            ]
+            if degenerate:
+                import warnings
+
+                warnings.warn(
+                    f"{len(degenerate)} explain block(s) produced all-zero "
+                    f"SHAP partials (iteration, part_id)={degenerate[:10]} — "
+                    "likely single-class fits (e.g. an unstratified part "
+                    "holding one label); their statistically-neutral zeros "
+                    "still fold into the selection statistics",
+                    UserWarning,
+                )
+            for g, pdf_it in res.groupby("iteration"):
+                pdf_it = pdf_it.reset_index(drop=True)
+                pdf_it["seed_start"] = seed_start
+                if self.store:
+                    self.store.write_iteration(self.phase, int(g), pdf_it)
+                long_parts.append(pdf_it)
+            if self.store:
+                self.store.log_metrics(
+                    {
+                        "phase": self.phase,
+                        "batch_iterations": sorted(int(x) for x in todo),
+                        "seed_start": seed_start,
+                        "n_parts": self.n_parts,
+                        "wall_s": wall,
+                        "rows_per_iteration": int(res["n_rows"].sum() / max(1, res["iteration"].nunique())),
+                        "degenerate_blocks": degenerate,
+                    }
+                )
+
+        long_df = pd.concat(long_parts, ignore_index=True)
+        long_df = long_df[long_df["iteration"].isin(global_its)]
+        wide = shaps_long_to_wide(long_df, feats + [RANDOM_COL])
+        self.cv_pos += len(global_its)  # batch completed: consume the splits
+        return wide
+
+
+class SparkExplainBackend(_ExplainBackend):
+    """Runs each explain batch as one ``groupBy(part_id).applyInPandas`` over
+    a prepared Spark DataFrame."""
 
     def __init__(
         self,
@@ -246,7 +375,6 @@ class SparkExplainBackend:
         self.probe_mode = probe_mode
         self.sort_cols = sort_cols
         self.store = store
-        self.phase = "main"
         self.cv = cv
         # absolute position in the selector-global cv stream (continues
         # across fits like the reference's persistent closure state)
@@ -344,157 +472,55 @@ class SparkExplainBackend:
         except Exception:
             pass
 
-    def explain(
-        self,
-        loop_its: int,
-        seed_start: int,
-        exclude_cols: list[str] | None = None,
-        extra_fit_kwargs: dict | None = None,
-    ) -> pd.DataFrame:
-        """Run one explain batch (reference ShapExplainer.explain). Returns the
-        wide I x (m+1) shaps_df for THIS batch (float32), checkpoint-aware."""
-        feats = [c for c in self.feature_cols if c not in set(exclude_cols or [])]
-        global_its = list(range(seed_start, seed_start + loop_its))
-        done = self.store.completed_iterations(self.phase) if self.store else set()
-        todo = [g for g in global_its if g not in done]
-
-        # every iteration consumes exactly one split from the selector-global
-        # cv stream, cached or not — positions stay aligned under checkpoint
-        # resume because the driver control flow replays identically.
-        # cv_pos itself only advances AFTER the batch completes (below):
-        # consume-on-use, so a failed batch leaves the stream where it was
-        # and an in-process retry replays the same splits (the reference's
-        # sequential-generator semantics)
-        cv_positions = {g: self.cv_pos + i for i, g in enumerate(sorted(global_its))}
-        fit_kw = {**self.fit_kwargs, **(extra_fit_kwargs or {})}
-
-        long_parts: list[pd.DataFrame] = []
-        for g in global_its:
-            if g in done:
-                cached = self.store.read_iteration(self.phase, g)
-                # a checkpointed iteration from a convergence round may have a
-                # different feature set; only reuse when it matches
-                if set(cached["feature"]) == set(feats) | {RANDOM_COL}:
-                    long_parts.append(cached)
-                else:
-                    todo.append(g)
-
-        if todo:
-            # one shuffle of the matrix by part_id; each partition block is
-            # materialized once and all todo iterations loop over it locally
-            iteration_pairs = [(int(g), int(g - seed_start)) for g in sorted(todo)]
-            fn = _make_group_fn(
-                feats,
-                self.label_col,
-                iteration_pairs,
-                seed_start,
-                self.val_size,
-                self.stratify_col,
-                self.group_col,
-                self.model,
-                self.probe_mode,
-                self.row_key_col,
-                self.sort_cols,
-                cv=self.cv,
-                cv_positions=cv_positions,
-                fit_kwargs=fit_kw,
-                matrix_dtype=self.matrix_dtype,
+    def _run_batch(self, fn, iteration_pairs) -> pd.DataFrame:
+        sc = self.spark.sparkContext
+        if self.show_progress:
+            # reference shows tqdm over iterations (shap_explainer.py:108);
+            # distributed batches surface through the job group instead —
+            # visible in the Spark UI / status tracker per explain batch
+            saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+            sc.setJobGroup(
+                f"powershap/{self.phase}",
+                f"explain batch: iterations {iteration_pairs[0][0]}"
+                f"..{iteration_pairs[-1][0]} over {self.n_parts} partitions",
             )
-            t0 = time.perf_counter()
+        try:
+            if self.single_batch:
+                # one-shot fit: shuffle inside the batch (no persisted
+                # exchange to amortize); part_id runs are then NOT
+                # contiguous, so the grouped-map path is required
+                src = self.df.withColumn("part_id", self.part_expr)
+                if self.n_parts > 1:
+                    src = src.repartition(self.n_parts, "part_id")
+                res = (
+                    src.groupBy("part_id")
+                    .applyInPandas(fn, schema=_RESULT_SCHEMA)
+                    .toPandas()
+                )
+            else:
+                # self.df is cached ALREADY partitioned by part_id and
+                # sorted on (part_id, sort_cols), so the grouped map
+                # plans no Exchange and no Sort (test_plans.py). With
+                # one group per partition mapInArrow has no per-group
+                # cost to save: it measured slower (explain(5) at 128
+                # parts on 32 cores: 1.36 s vs 1.02 s).
+                res = (
+                    self.df.groupBy("part_id")
+                    .applyInPandas(fn, schema=_RESULT_SCHEMA)
+                    .toPandas()
+                )
+        finally:
             if self.show_progress:
-                # reference shows tqdm over iterations (shap_explainer.py:108);
-                # distributed batches surface through the job group instead —
-                # visible in the Spark UI / status tracker per explain batch
-                self.spark.sparkContext.setJobGroup(
-                    f"powershap/{self.phase}",
-                    f"explain batch: iterations {iteration_pairs[0][0]}"
-                    f"..{iteration_pairs[-1][0]} over {self.n_parts} partitions",
-                )
-            try:
-                if self.single_batch:
-                    # one-shot fit: shuffle inside the batch (no persisted
-                    # exchange to amortize); part_id runs are then NOT
-                    # contiguous, so the grouped-map path is required
-                    src = self.df.withColumn("part_id", self.part_expr)
-                    if self.n_parts > 1:
-                        src = src.repartition(self.n_parts, "part_id")
-                    res = (
-                        src.groupBy("part_id")
-                        .applyInPandas(fn, schema=_RESULT_SCHEMA)
-                        .toPandas()
-                    )
-                else:
-                    # self.df is cached ALREADY partitioned by part_id and
-                    # sorted on (part_id, sort_cols), so the grouped map
-                    # plans no Exchange and no Sort (test_plans.py). With
-                    # one group per partition mapInArrow has no per-group
-                    # cost to save: it measured slower (explain(5) at 128
-                    # parts on 32 cores: 1.36 s vs 1.02 s).
-                    res = (
-                        self.df.groupBy("part_id")
-                        .applyInPandas(fn, schema=_RESULT_SCHEMA)
-                        .toPandas()
-                    )
-            finally:
-                if self.show_progress:
-                    # don't leave the group attached to the user's thread
-                    sc = self.spark.sparkContext
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setLocalProperty("spark.job.description", None)
-            wall = time.perf_counter() - t0
-            if res.empty:
-                raise ValueError(
-                    "explain produced no results — the input DataFrame has no "
-                    "rows (e.g. every probe fell before its conversation start)"
-                )
-            # Surface degenerate (no-signal) fits DRIVER-side: a single-class
-            # block's zero-coefficient model yields all-zero partials for
-            # every feature, and the executor-side UserWarning raised inside
-            # applyInPandas never reaches the driver console (ADVICE r3).
-            blk_max = res.groupby(["iteration", "part_id"])["mean_abs_shap"].max()
-            degenerate = [
-                (int(i), int(p)) for (i, p) in blk_max[blk_max == 0.0].index
-            ]
-            if degenerate:
-                import warnings
-
-                warnings.warn(
-                    f"{len(degenerate)} explain block(s) produced all-zero "
-                    f"SHAP partials (iteration, part_id)={degenerate[:10]} — "
-                    "likely single-class fits (e.g. an unstratified part "
-                    "holding one label); their statistically-neutral zeros "
-                    "still fold into the selection statistics",
-                    UserWarning,
-                )
-            for g, pdf_it in res.groupby("iteration"):
-                pdf_it = pdf_it.reset_index(drop=True)
-                pdf_it["seed_start"] = seed_start
-                if self.store:
-                    self.store.write_iteration(self.phase, int(g), pdf_it)
-                long_parts.append(pdf_it)
-            if self.store:
-                self.store.log_metrics(
-                    {
-                        "phase": self.phase,
-                        "batch_iterations": sorted(int(x) for x in todo),
-                        "seed_start": seed_start,
-                        "n_parts": self.n_parts,
-                        "wall_s": wall,
-                        "rows_per_iteration": int(res["n_rows"].sum() / max(1, res["iteration"].nunique())),
-                        "degenerate_blocks": degenerate,
-                    }
-                )
-
-        long_df = pd.concat(long_parts, ignore_index=True)
-        long_df = long_df[long_df["iteration"].isin(global_its)]
-        wide = shaps_long_to_wide(long_df, feats + [RANDOM_COL])
-        self.cv_pos += len(global_its)  # batch completed: consume the splits
-        return wide
+                # hand the caller's thread back the job group it had
+                for k, v in saved.items():
+                    sc.setLocalProperty(k, v)
+        return res
 
 
-class PandasExplainBackend:
-    """Local single-process backend — the exact reference loop, used for
-    parity unit tests and tiny inputs (no Spark session required)."""
+class PandasExplainBackend(_ExplainBackend):
+    """Local single-process backend (no Spark session required): the whole
+    frame is part 0 and the Spark backend's group function runs on it
+    in-process — the exact reference loop."""
 
     def __init__(
         self,
@@ -513,82 +539,29 @@ class PandasExplainBackend:
         self.matrix_dtype = np.dtype(matrix_dtype)
         self.pdf = X.copy()
         self.pdf["__label"] = np.asarray(y)
+        self.label_col = "__label"
+        self.stratify_col = self.group_col = None
         if stratify is not None:
             self.pdf["__strat"] = np.asarray(stratify)
+            self.stratify_col = "__strat"
         if groups is not None:
             self.pdf["__groups"] = np.asarray(groups)
+            self.group_col = "__groups"
         self.feature_cols = list(X.columns)
         self.val_size = val_size
-        self.has_strat = stratify is not None
-        self.has_groups = groups is not None
         self.model = model
+        # one block in its given row order: positional probe, no row key,
+        # no sort
+        self.n_parts = 1
+        self.probe_mode = "positional"
+        self.row_key_col = self.sort_cols = None
         self.store = store
-        self.phase = "main"
         self.cv = cv
         self.cv_pos = int(cv_start_pos)
-        self._cv_gen = None
         self.fit_kwargs = dict(fit_kwargs or {})
 
-    def _next_split(self):
-        """One split from the selector-global cv stream. The backend NEVER
-        generates from the selector's InfiniteSplitter directly (that would
-        leave a live — unpicklable — generator on shared state); it
-        reconstructs the stream at its starting position from a pristine
-        copy, exactly like the Spark backend's executor-side fast-forward."""
-        if self._cv_gen is None:
-            y_ = (
-                self.pdf["__strat"].to_numpy()
-                if self.has_strat
-                else self.pdf["__label"].to_numpy()
-            )
-            grp = self.pdf["__groups"].to_numpy() if self.has_groups else None
-            self._cv_gen = self.cv.at_position(
-                self.cv_pos, np.zeros((len(self.pdf), 1)), y=y_, groups=grp
-            )
-        self.cv_pos += 1
-        return next(self._cv_gen)
-
-    def explain(self, loop_its, seed_start, exclude_cols=None, extra_fit_kwargs=None) -> pd.DataFrame:
-        feats = [c for c in self.feature_cols if c not in set(exclude_cols or [])]
-        fit_kw = {**self.fit_kwargs, **(extra_fit_kwargs or {})}
-        rows = []
-        blk = None  # built lazily: an all-checkpointed batch never needs it
-        for i in range(loop_its):
-            g = seed_start + i
-            split = self._next_split() if self.cv is not None else None
-            if self.store and g in self.store.completed_iterations(self.phase):
-                cached = self.store.read_iteration(self.phase, g)
-                if set(cached["feature"]) == set(feats) | {RANDOM_COL}:
-                    rows.append(cached)
-                    continue
-            if blk is None:
-                blk = prepare_block(
-                    self.pdf,
-                    feats,
-                    "__label",
-                    stratify_col="__strat" if self.has_strat else None,
-                    group_col="__groups" if self.has_groups else None,
-                    matrix_dtype=self.matrix_dtype,
-                )
-            out = explain_prepared(
-                blk,
-                iteration=i,
-                seed_start=seed_start,
-                val_size=self.val_size,
-                model=self.model,
-                split_override=split,
-                fit_kwargs=fit_kw,
-            )
-            out.insert(0, "part_id", np.int32(0))
-            out.insert(0, "iteration", np.int32(g))
-            out["n_rows"] = np.int64(len(self.pdf))
-            out["wall_ms"] = 0.0
-            out["seed_start"] = seed_start
-            if self.store:
-                self.store.write_iteration(self.phase, g, out)
-            rows.append(out)
-        long_df = pd.concat(rows, ignore_index=True)
-        return shaps_long_to_wide(long_df, feats + [RANDOM_COL])
+    def _run_batch(self, fn, iteration_pairs) -> pd.DataFrame:
+        return fn((0,), self.pdf)
 
 
 # ---------------------------------------------------------------------------
@@ -761,9 +734,7 @@ class PowerShapSelector:
             self._cv_consumed = backend.cv_pos if self.cv is not None else 0
             # release the cached projected matrix — repeated fits in one
             # session must not accumulate cached DataFrames
-            release = getattr(backend, "release", None)
-            if release:
-                release()
+            backend.release()
 
         sub = processed[processed.index != RANDOM_COL]
         order = {c: i for i, c in enumerate(self.feature_names_in_)}

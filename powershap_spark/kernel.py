@@ -145,9 +145,10 @@ def _pooled(role: str, shape, dtype) -> np.ndarray:
     so results are bit-identical to fresh allocations.
 
     The pool is THREAD-local (not merely process-global): Spark's Python
-    UDF workers run one task at a time, but PandasExplainBackend can run
-    in two driver threads at once (concurrent selector fits in a
-    notebook) — a shared pool there would silently corrupt fit matrices.
+    UDF workers run one task at a time, but the local backend runs the
+    explain group function in the calling driver thread, and two driver
+    threads can fit at once (concurrent selector fits in a notebook) — a
+    shared pool there would silently corrupt fit matrices.
     Each role keeps up to ``_POOL_SLOTS_PER_ROLE`` LRU (shape, dtype)
     slots so alternating CV-fold shapes don't thrash a single slot;
     ``clear_buffer_pool()`` releases everything the calling thread pins."""
@@ -411,14 +412,6 @@ class _VendoredLinearKernel:
     """Default kernel: vendored model + exact SHAP. Task from y dtype, like
     the reference's default-model rule (powershap.py:181-197): float y ->
     regressor, else classifier."""
-
-    name = "vendored_linear"
-
-    @staticmethod
-    def supports_model(model) -> bool:
-        return model is None or isinstance(
-            model, (LinearRegressionModel, LogisticRegressionModel)
-        )
 
     @staticmethod
     def fit_get_shap(X_train, Y_train, X_val, Y_val, random_seed, model=None, **kw):
@@ -748,50 +741,6 @@ def explain_prepared(
             "mean_abs_shap": mean_abs,
             "n_val_rows": np.int64(len(val_idx)),
         }
-    )
-
-
-def explain_iteration(
-    pdf: pd.DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    iteration: int,
-    seed_start: int = 0,
-    val_size: float = 0.2,
-    stratify_col: str | None = None,
-    group_col: str | None = None,
-    model=None,
-    probe_mode: str = "positional",
-    row_key_col: str | None = None,
-    sort_cols: list[str] | None = None,
-    split_override: tuple | None = None,
-    fit_kwargs: dict | None = None,
-    matrix_dtype=np.float32,
-) -> pd.DataFrame:
-    """One-shot convenience wrapper: ``prepare_block`` + ``explain_prepared``.
-    Batched callers (the applyInPandas group fn, the pandas backend loop)
-    prepare the block once and call ``explain_prepared`` per iteration —
-    results are bit-identical either way (same matrix values, same probe,
-    same split)."""
-    blk = prepare_block(
-        pdf,
-        feature_cols,
-        label_col,
-        stratify_col=stratify_col,
-        group_col=group_col,
-        row_key_col=row_key_col,
-        sort_cols=sort_cols,
-        matrix_dtype=matrix_dtype,
-    )
-    return explain_prepared(
-        blk,
-        iteration,
-        seed_start=seed_start,
-        val_size=val_size,
-        model=model,
-        probe_mode=probe_mode,
-        split_override=split_override,
-        fit_kwargs=fit_kwargs,
     )
 
 

@@ -17,6 +17,17 @@ def _as_spark(spark, X, y):
     return spark.createDataFrame(pdf)
 
 
+def _inputs(spark, X, y):
+    """The same rows as pandas input (the local backend) and as a Spark
+    DataFrame (the Spark backend): name -> a call that fits a selector."""
+    sdf = _as_spark(spark, X, y)
+    feats = list(X.columns)
+    return {
+        "pandas": lambda sel: sel.fit(X, y),
+        "spark": lambda sel: sel.fit(sdf, label_col="label", feature_cols=feats),
+    }
+
+
 def test_spark_fit_matches_pandas_fit(spark, clf_xy):
     """n_parts=1 + stable sort = the exact reference loop, so the Spark path
     must reproduce the pandas path bit-for-bit."""
@@ -93,30 +104,36 @@ def test_keyed_probe_partition_invariance(spark, clf_xy):
 
 
 def test_spark_resume_identical(spark, clf_xy, tmp_path):
+    """A run resumed from a checkpoint (with a corrupt partial for the first
+    missing iteration) is byte-identical to an uninterrupted run, on the
+    local and the Spark backend."""
     X, y = clf_xy
-    sdf = _as_spark(spark, X, y)
     kw = dict(sort_cols=["row_id"])
-    full = PowerShapSelector(power_iterations=6, **kw).fit(
-        sdf, label_col="label", feature_cols=list(X.columns)
-    )
-    # interrupted run: 3 its, then a corrupt partial for iteration 3
-    PowerShapSelector(
-        power_iterations=3, checkpoint_dir=str(tmp_path), run_id="r", **kw
-    ).fit(sdf, label_col="label", feature_cols=list(X.columns))
-    (tmp_path / "r" / "iter=main.3.parquet").write_bytes(b"partial garbage")
-    resumed = PowerShapSelector(
-        power_iterations=6, checkpoint_dir=str(tmp_path), run_id="r", **kw
-    ).fit(sdf, label_col="label", feature_cols=list(X.columns))
-    assert np.allclose(
-        full._processed_shaps_df.sort_index().values,
-        resumed._processed_shaps_df.sort_index().values,
-        equal_nan=True,
-    )
-    # lineage columns present in the checkpoint
-    cp = pd.read_parquet(tmp_path / "r" / "iter=main.0.parquet")
-    for col in ["iteration", "part_id", "feature", "mean_abs_shap", "n_val_rows", "n_rows", "wall_ms", "seed_start"]:
-        assert col in cp.columns
-    assert (tmp_path / "r" / "metrics.jsonl").exists()
+    for name, fit in _inputs(spark, X, y).items():
+        full = fit(PowerShapSelector(power_iterations=6, **kw))
+        # interrupted run: 3 its, then a corrupt partial for iteration 3
+        fit(
+            PowerShapSelector(
+                power_iterations=3, checkpoint_dir=str(tmp_path), run_id=name, **kw
+            )
+        )
+        (tmp_path / name / "iter=main.3.parquet").write_bytes(b"partial garbage")
+        resumed = fit(
+            PowerShapSelector(
+                power_iterations=6, checkpoint_dir=str(tmp_path), run_id=name, **kw
+            )
+        )
+        pd.testing.assert_frame_equal(
+            full._processed_shaps_df.sort_index(),
+            resumed._processed_shaps_df.sort_index(),
+            check_exact=True,
+        )
+        # lineage columns present in the checkpoint, with measured wall times
+        cp = pd.read_parquet(tmp_path / name / "iter=main.0.parquet")
+        for col in ["iteration", "part_id", "feature", "mean_abs_shap", "n_val_rows", "n_rows", "wall_ms", "seed_start"]:
+            assert col in cp.columns
+        assert (cp["wall_ms"] > 0).all()
+        assert (tmp_path / name / "metrics.jsonl").exists()
 
 
 def test_automatic_mode_spark(spark, clf_xy):
@@ -163,23 +180,25 @@ def test_spark_resume_identical_with_cv(spark, clf_xy, tmp_path):
     from powershap_spark.splitters import KFold
 
     X, y = clf_xy
-    sdf = _as_spark(spark, X, y)
     kw = dict(sort_cols=["row_id"])
-    full = PowerShapSelector(power_iterations=6, cv=KFold(3), **kw).fit(
-        sdf, label_col="label", feature_cols=list(X.columns)
-    )
-    PowerShapSelector(
-        power_iterations=3, cv=KFold(3), checkpoint_dir=str(tmp_path),
-        run_id="rcv", **kw
-    ).fit(sdf, label_col="label", feature_cols=list(X.columns))
-    resumed = PowerShapSelector(
-        power_iterations=6, cv=KFold(3), checkpoint_dir=str(tmp_path),
-        run_id="rcv", **kw
-    ).fit(sdf, label_col="label", feature_cols=list(X.columns))
-    a = full._processed_shaps_df.sort_index()
-    b = resumed._processed_shaps_df.sort_index()
-    assert list(a.index) == list(b.index)
-    assert (a.values == b.values).all()  # byte-identity, not allclose
+    for name, fit in _inputs(spark, X, y).items():
+        full = fit(PowerShapSelector(power_iterations=6, cv=KFold(3), **kw))
+        fit(
+            PowerShapSelector(
+                power_iterations=3, cv=KFold(3), checkpoint_dir=str(tmp_path),
+                run_id=name, **kw
+            )
+        )
+        resumed = fit(
+            PowerShapSelector(
+                power_iterations=6, cv=KFold(3), checkpoint_dir=str(tmp_path),
+                run_id=name, **kw
+            )
+        )
+        a = full._processed_shaps_df.sort_index()
+        b = resumed._processed_shaps_df.sort_index()
+        assert list(a.index) == list(b.index)
+        assert (a.values == b.values).all()  # byte-identity, not allclose
 
 
 def test_cv_block_failure_raises_actionable_error(spark, clf_xy):
@@ -205,14 +224,56 @@ def test_cv_block_failure_raises_actionable_error(spark, clf_xy):
 def test_single_class_block_warns_driver_side(spark, clf_xy):
     """A single-class y yields zero-coefficient (no-signal) fits whose
     executor-side warning never reaches the driver; the engine must surface
-    the all-zero-partial blocks as a DRIVER-side warning (ADVICE r3)."""
+    the all-zero-partial blocks as a DRIVER-side warning (ADVICE r3), on
+    both backends."""
     X, _ = clf_xy
     y_const = np.zeros(len(X), dtype=np.int64)
-    sdf = _as_spark(spark, X, y_const)
-    sel = PowerShapSelector(power_iterations=2, sort_cols=["row_id"])
-    with pytest.warns(UserWarning, match="all-zero"):
-        sel.fit(sdf, label_col="label", feature_cols=list(X.columns))
-    assert sel.selected_features_ == []
+    for fit in _inputs(spark, X, y_const).values():
+        sel = PowerShapSelector(power_iterations=2, sort_cols=["row_id"])
+        with pytest.warns(UserWarning, match="all-zero"):
+            fit(sel)
+        assert sel.selected_features_ == []
+
+
+class _FailsOnIteration2:
+    """A custom kernel whose fit raises on iteration 2 (model seed 2)."""
+
+    def fit_get_shap(self, X_train, Y_train, X_val, Y_val, random_seed, model=None, **kw):
+        if random_seed == 2:
+            raise RuntimeError("fit failed on iteration 2")
+        return np.abs(X_val)
+
+
+def test_failed_batch_consumes_no_cv_splits(clf_xy):
+    """cv splits are consumed only by a completed batch: a fit that fails
+    mid-batch leaves the selector's stream position where it was."""
+    from powershap_spark.splitters import KFold
+
+    X, y = clf_xy
+    sel = PowerShapSelector(power_iterations=2, cv=KFold(3), model=_FailsOnIteration2())
+    sel.fit(X, y)
+    assert sel._cv_consumed == 2
+    sel.power_iterations = 4
+    with pytest.raises(RuntimeError, match="iteration 2"):
+        sel.fit(X, y)
+    assert sel._cv_consumed == 2
+
+
+def test_fit_restores_callers_job_group(spark, clf_xy):
+    """An explain batch labels its jobs with its own job group, then gives
+    the calling thread back the group it had."""
+    X, y = clf_xy
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "the caller's jobs")
+    try:
+        _inputs(spark, X, y)["spark"](
+            PowerShapSelector(power_iterations=2, sort_cols=["row_id"])
+        )
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "the caller's jobs"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
 
 
 def test_gb_stumps_model_on_spark_path(spark):

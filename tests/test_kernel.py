@@ -7,10 +7,11 @@ import pytest
 from powershap_spark.kernel import (
     LinearRegressionModel,
     LogisticRegressionModel,
-    explain_iteration,
+    explain_prepared,
     inject_probe_keyed,
     inject_probe_positional,
     linear_shap_values,
+    prepare_block,
     train_test_split_indices,
 )
 
@@ -93,11 +94,11 @@ def test_logistic_regression_separates():
     assert (pred == y).mean() > 0.95
 
 
-def test_explain_iteration_output_contract():
+def test_explain_prepared_output_contract():
     r = np.random.RandomState(3)
     pdf = pd.DataFrame(r.randn(200, 3), columns=["a", "b", "c"])
     pdf["label"] = (pdf["a"] > 0).astype(np.int64)
-    out = explain_iteration(pdf, ["a", "b", "c"], "label", iteration=0)
+    out = explain_prepared(prepare_block(pdf, ["a", "b", "c"], "label"), iteration=0)
     assert list(out.columns) == ["feature", "mean_abs_shap", "n_val_rows"]
     assert list(out.feature) == ["a", "b", "c", "random_uniform_feature"]
     assert out.mean_abs_shap.dtype == np.float32
@@ -111,10 +112,8 @@ def test_explain_iteration_output_contract():
 def test_prepared_loop_bit_identical_to_one_shot():
     """The batched path (prepare_block once + explain_prepared per
     iteration, probe column overwritten in place) must be BIT-identical to
-    the one-shot explain_iteration — the pass-elimination refactor may not
-    change a single value, in both probe modes."""
-    from powershap_spark.kernel import explain_prepared, prepare_block
-
+    a fresh prepare_block per iteration — the pass-elimination refactor may
+    not change a single value, in both probe modes."""
     r = np.random.RandomState(21)
     pdf = pd.DataFrame(r.randn(300, 4), columns=["a", "b", "c", "d"])
     pdf["label"] = (pdf["a"] + 0.3 * pdf["b"] > 0).astype(np.int64)
@@ -126,14 +125,11 @@ def test_prepared_loop_bit_identical_to_one_shot():
             batched = explain_prepared(
                 blk, iteration=it, seed_start=5, probe_mode=mode
             )
-            oneshot = explain_iteration(
-                pdf,
-                feats,
-                "label",
+            oneshot = explain_prepared(
+                prepare_block(pdf, feats, "label", row_key_col=key),
                 iteration=it,
                 seed_start=5,
                 probe_mode=mode,
-                row_key_col=key,
             )
             pd.testing.assert_frame_equal(batched, oneshot)
 
@@ -155,14 +151,14 @@ def test_logistic_multiclass_ovr():
     assert phi.shape == (100, 3, 3)
 
 
-def test_explain_iteration_multiclass_max_over_outputs():
-    """A 3-class label flows through explain_iteration via the
+def test_explain_prepared_multiclass_max_over_outputs():
+    """A 3-class label flows through explain_prepared via the
     max-over-outputs reduction; the informative feature still dominates."""
     r = np.random.RandomState(7)
     pdf = pd.DataFrame(r.randn(600, 3), columns=["a", "b", "c"])
     pdf["label"] = np.digitize(pdf["a"], [-0.5, 0.5]).astype(np.int64)
     assert pdf["label"].nunique() == 3
-    out = explain_iteration(pdf, ["a", "b", "c"], "label", iteration=0)
+    out = explain_prepared(prepare_block(pdf, ["a", "b", "c"], "label"), iteration=0)
     s = out.set_index("feature").mean_abs_shap
     assert s["a"] > 3 * s["random_uniform_feature"]
     assert s["a"] > 3 * s["b"]

@@ -107,34 +107,6 @@ def test_long_to_wide_weighted_mean():
     assert wide.dtypes["a"] == np.float32
 
 
-def test_aggregate_iterations_spark_matches_pandas_combine(spark):
-    """The Spark-side long-table reduction equals shaps_long_to_wide's
-    pandas count-weighted combine on the same per-partition partials."""
-    import numpy as np
-
-    from powershap_spark.stats import aggregate_iterations_spark, shaps_long_to_wide
-
-    rng = np.random.RandomState(0)
-    rows = []
-    for it in range(4):
-        for part in range(3):
-            for feat in ("a", "b", "random_uniform_feature"):
-                rows.append(
-                    {
-                        "iteration": it,
-                        "part_id": part,
-                        "feature": feat,
-                        "mean_abs_shap": np.float32(rng.rand()),
-                        "n_val_rows": int(rng.randint(10, 50)),
-                    }
-                )
-    pdf = pd.DataFrame(rows)
-    wide_pd = shaps_long_to_wide(pdf, ["a", "b", "random_uniform_feature"])
-    agg = aggregate_iterations_spark(spark.createDataFrame(pdf))
-    wide_sp = shaps_long_to_wide(agg, ["a", "b", "random_uniform_feature"])
-    assert np.allclose(wide_pd.values, wide_sp.values, rtol=1e-6)
-
-
 def test_selection_statistics_spark_matches_pandas(spark):
     """The distributed statistics (A3 combine + A4 impact + A6 tie-aware
     p-value) must equal statistical_analysis on the same iterations table —
